@@ -14,7 +14,10 @@ Pipeline (all lazy DataFrame stages; Python only inside Arrow batches):
         terms else 0; mapInArrow merges each run's partials (one lexsort
         restores global doc order) → posting blob (delta+varint); cold
         terms finalize here
-    → PHASE 2: groupBy(term) merge salted partials → final blob
+    → PHASE 2: hot terms' salted partials shuffle on term into the
+        segment-merge mapInArrow kernel (_merge_segments, shared with
+        compact_index): per Arrow batch of terms, one vectorized decode of
+        every partial blob, one lexsort, one re-encode → final blob
         + df/cf stats + block-max impact metadata (BM25 upper bounds)
     → write parquet range-partitioned & sorted by term (row-group pruning
       for term-lookup queries), partitioned by bucket for resumability.
@@ -49,7 +52,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from macrobase_spark.index.codec import delta_varint_encode, delta_varint_decode
+from macrobase_spark.index.codec import delta_varint_decode
 
 # In-process mutation registry: update_index / compact_index register the
 # index dir they are mutating for the duration of the mutation. Crash
@@ -110,37 +113,87 @@ def _impact(tfs: np.ndarray, dls: np.ndarray, avgdl: float) -> np.ndarray:
     return tf / (tf + K1 * (1.0 - B + B * dls.astype(np.float64) / avgdl))
 
 
-def _block_max(impact: np.ndarray) -> list[float]:
-    n_blocks = (len(impact) + BLOCK_SIZE - 1) // BLOCK_SIZE
-    return [float(impact[i * BLOCK_SIZE:(i + 1) * BLOCK_SIZE].max())
-            for i in range(n_blocks)]
-
-
 def _run_starts_arrow(tbl) -> np.ndarray:
-    """Run boundaries on (term, salt) over a single-chunk Arrow table —
-    adjacent-element comparison in pyarrow C++ (no string boxing)."""
+    """Run boundaries on the run key — (term, salt), or term alone when the
+    table has no salt column — over a single-chunk Arrow table: adjacent-
+    element comparison in pyarrow C++ (no string boxing)."""
     import pyarrow.compute as pc
 
     terms = tbl.column("term").chunk(0)
-    salts = tbl.column("salt").chunk(0).to_numpy(zero_copy_only=False)
     n = len(terms)
     if n <= 1:
         return np.zeros(1, dtype=np.int64)
-    t_neq = pc.not_equal(terms.slice(1), terms.slice(0, n - 1)).to_numpy(
+    change = pc.not_equal(terms.slice(1), terms.slice(0, n - 1)).to_numpy(
         zero_copy_only=False)
-    change = np.flatnonzero(t_neq | (salts[1:] != salts[:-1])) + 1
-    return np.concatenate(([0], change)).astype(np.int64)
+    if "salt" in tbl.column_names:
+        salts = tbl.column("salt").chunk(0).to_numpy(zero_copy_only=False)
+        change = change | (salts[1:] != salts[:-1])
+    return np.concatenate(([0], np.flatnonzero(change) + 1)).astype(np.int64)
+
+
+def _map_runs(encode_slice):
+    """The carry-across-batches loop every run kernel shares, as a
+    mapInArrow function over partitions sorted by the run key. Runs never
+    span partitions (the shuffle key contains the run key); a run spanning
+    Arrow batches is held back and joined with the next batch.
+    `encode_slice(tbl, starts, ends)` turns the complete runs [starts[i],
+    ends[i]) of a single-chunk table into one output batch, or None when
+    nothing survives."""
+    import pyarrow as pa
+
+    def fn(batches):
+        carry = None  # pa.Table holding the last (possibly incomplete) run
+        for rb in batches:
+            tbl = pa.Table.from_batches([rb])
+            if carry is not None:
+                tbl = pa.concat_tables([carry, tbl])
+            tbl = tbl.combine_chunks()
+            if tbl.num_rows == 0:
+                carry = None
+                continue
+            starts = _run_starts_arrow(tbl)
+            if len(starts) == 1:
+                carry = tbl
+                continue
+            carry = tbl.slice(int(starts[-1]))
+            out = encode_slice(tbl, starts[:-1], starts[1:])
+            if out is not None:
+                yield out
+        if carry is not None and carry.num_rows:
+            starts = _run_starts_arrow(carry)
+            ends = np.concatenate((starts[1:], [carry.num_rows]))
+            out = encode_slice(carry, starts, ends)
+            if out is not None:
+                yield out
+
+    return fn
+
+
+def _final_mask(run_terms, hot_terms: set[str] | None) -> np.ndarray:
+    """Which runs are complete posting lists: every run not of a hot term
+    (an empty set finalizes everything); None marks every run a mergeable
+    partial (update path)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if hot_terms:
+        return pc.invert(pc.is_in(
+            run_terms, value_set=pa.array(sorted(hot_terms), type=pa.string()))
+        ).to_numpy(zero_copy_only=False)
+    return np.full(len(run_terms), hot_terms is not None)
 
 
 def _encode_runs_flat(run_terms, ids: np.ndarray, tfs: np.ndarray,
                       dls: np.ndarray, starts: np.ndarray, ends: np.ndarray,
-                      hot_terms: set[str] | None, avgdl: float):
+                      hot_terms: set[str] | None, avgdl: float,
+                      fan_in: np.ndarray | None = None):
     """Shared vectorized encode core: flat doc-sorted posting arrays +
     [starts, ends) run boundaries → one _ENC_SCHEMA Arrow batch. Whole-
     array varint streams (codec.encode_run_batch), reduceat per-run and
     per-block maxima, Arrow-native output assembly — no Python loop over
     runs. `ids/tfs/dls` must be sliced to exactly ends[-1] values and
-    ascending in doc_id within each run."""
+    ascending in doc_id within each run; runs must be non-empty. `fan_in`
+    is the number of input rows each run merged (default 1)."""
     import pyarrow as pa
 
     from macrobase_spark.index.codec import encode_run_batch
@@ -150,18 +203,7 @@ def _encode_runs_flat(run_terms, ids: np.ndarray, tfs: np.ndarray,
     csum = np.concatenate(([0], np.cumsum(tfs.astype(np.int64))))
     cfs = csum[ends] - csum[starts]
     impact_all = _impact(tfs, dls, avgdl)
-
-    if hot_terms:
-        import pyarrow.compute as pc
-
-        final = pc.invert(pc.is_in(
-            run_terms,
-            value_set=pa.array(sorted(hot_terms), type=pa.string()))
-        ).to_numpy(zero_copy_only=False)
-    elif hot_terms is not None:  # empty set: every run finalizes here
-        final = np.ones(len(starts), dtype=bool)
-    else:  # None → every run is a mergeable partial (update path)
-        final = np.zeros(len(starts), dtype=bool)
+    final = _final_mask(run_terms, hot_terms)
 
     # per-run max impact: every run start is a reduceat boundary, so each
     # segment is exactly one run
@@ -188,7 +230,8 @@ def _encode_runs_flat(run_terms, ids: np.ndarray, tfs: np.ndarray,
         [run_terms,
          pa.array(dfs, type=pa.int64()),
          pa.array(cfs, type=pa.int64()),
-         pa.array(np.ones(len(starts), dtype=np.int32), type=pa.int32()),
+         pa.array(np.ones(len(starts), np.int32) if fan_in is None else fan_in,
+                  type=pa.int32()),
          pa.array(max_impact, type=pa.float64()),
          block_max,
          pa.array([len(b) for b in blobs], type=pa.int64()),
@@ -196,6 +239,73 @@ def _encode_runs_flat(run_terms, ids: np.ndarray, tfs: np.ndarray,
          pa.array(final)],
         names=["term", "df", "cf", "fan_in", "max_impact", "block_max",
                "blob_len", "blob", "final"])
+
+
+def _sorted_live_runs(run_of: np.ndarray, ids: np.ndarray, n_runs: int,
+                      drop: np.ndarray | None):
+    """Restore doc order inside each run with ONE lexsort over the whole
+    batch (run_of is nondecreasing, so run order is kept), optionally
+    purge tombstoned `drop` ids, and locate the runs that still hold
+    postings. Returns (order, live, starts, ends): gather the flat arrays
+    by `order`; live run i spans [starts[i], ends[i]) of the result."""
+    order = np.lexsort((ids, run_of))
+    if drop is not None:
+        order = order[~np.isin(ids[order].astype(np.int64), drop)]
+    counts = np.bincount(run_of[order], minlength=n_runs)
+    live = np.flatnonzero(counts)
+    ends = np.cumsum(counts[live])
+    return order, live, ends - counts[live], ends
+
+
+def _merge_encode_runs(run_terms, run_of, ids, tfs, dls, hot_terms, avgdl,
+                       drop=None, fan_in=None):
+    """Postings merge core: per-run doc sort (+ optional purge, dropping
+    runs left empty — a fully purged term leaves the dictionary) → the
+    shared flat encode. None when no run survives."""
+    import pyarrow as pa
+
+    order, live, starts, ends = _sorted_live_runs(run_of, ids,
+                                                  len(run_terms), drop)
+    if not len(live):
+        return None
+    return _encode_runs_flat(
+        run_terms.take(pa.array(live)),
+        ids[order].astype(np.uint64), tfs[order].astype(np.uint64),
+        dls[order].astype(np.uint64), starts, ends, hot_terms, avgdl,
+        None if fan_in is None else fan_in[live])
+
+
+def _merge_encode_pos_runs(run_terms, run_of, ids, tfs, dls, pos,
+                           hot_terms, drop=None):
+    """Positional merge core: the same per-run doc sort (+ purge) as
+    _merge_encode_runs; each doc's position segment follows it through a
+    vectorized gather, and every surviving run encodes into one self-
+    contained positional blob (codec.encode_positional_batch) → one
+    _POS_ENC_SCHEMA batch, or None when no run survives."""
+    import pyarrow as pa
+
+    from macrobase_spark.index.codec import encode_positional_batch
+
+    order, live, starts, ends = _sorted_live_runs(run_of, ids,
+                                                  len(run_terms), drop)
+    if not len(live):
+        return None
+    tfs = tfs.astype(np.int64)
+    seg_starts = np.concatenate(([0], np.cumsum(tfs)))[:-1]
+    tfs_s = tfs[order]
+    new_starts = np.concatenate(([0], np.cumsum(tfs_s)))
+    pos_s = pos[np.repeat(seg_starts[order] - new_starts[:-1], tfs_s)
+                + np.arange(new_starts[-1], dtype=np.int64)]
+    blobs = encode_positional_batch(ids[order], tfs_s, dls[order], pos_s,
+                                    starts, ends)
+    terms = run_terms.take(pa.array(live))
+    return pa.RecordBatch.from_arrays(
+        [terms,
+         pa.array(ends - starts, type=pa.int64()),
+         pa.array([len(b) for b in blobs], type=pa.int64()),
+         pa.array(blobs, type=pa.binary()),
+         pa.array(_final_mask(terms, hot_terms))],
+        names=["term", "df", "blob_len", "blob", "final"])
 
 
 def _encode_tbl_slice(tbl, starts: np.ndarray, ends: np.ndarray,
@@ -226,36 +336,26 @@ def _encode_sorted_runs(hot_terms: set[str] | None, avgdl: float):
     objects (the pandas path paid one PyObject per posting row — the
     dominant cost of the encode stage at 22M rows), run detection /
     aggregates / block maxima are single pyarrow-C++/numpy calls, and the
-    output is assembled as Arrow arrays directly. Runs never span
-    partitions (the shuffle key is (term, salt)); runs spanning Arrow
-    batches are carried. Cold terms (single shard) are finalized here,
-    skipping phase 2."""
+    output is assembled as Arrow arrays directly. Cold terms (single
+    shard) are finalized here, skipping phase 2."""
+    return _map_runs(lambda tbl, starts, ends: _encode_tbl_slice(
+        tbl, starts, ends, hot_terms, avgdl))
+
+
+def _list_runs(tbl, starts: np.ndarray, ends: np.ndarray):
+    """Run layout of a partial-row slice whose list columns flatten to one
+    value per posting: (run_terms, run_of_value, n), where the runs
+    [starts, ends) own the first n flattened values, in run order."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    def fn(batches):
-        carry = None  # pa.Table holding the last (possibly incomplete) run
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            if carry is not None:
-                tbl = pa.concat_tables([carry, tbl])
-            tbl = tbl.combine_chunks()
-            if tbl.num_rows == 0:
-                carry = None
-                continue
-            starts = _run_starts_arrow(tbl)
-            # hold back the last (possibly incomplete) run
-            if len(starts) == 1:
-                carry = tbl
-                continue
-            carry = tbl.slice(int(starts[-1]))
-            yield _encode_tbl_slice(tbl, starts[:-1], starts[1:],
-                                    hot_terms, avgdl)
-        if carry is not None and carry.num_rows:
-            starts = _run_starts_arrow(carry)
-            ends = np.concatenate((starts[1:], [carry.num_rows]))
-            yield _encode_tbl_slice(carry, starts, ends, hot_terms, avgdl)
-
-    return fn
+    row_lens = pc.list_value_length(tbl.column("ids").chunk(0)).to_numpy(
+        zero_copy_only=False).astype(np.int64)
+    row_flat = np.concatenate(([0], np.cumsum(row_lens)))
+    run_of = np.repeat(np.arange(len(starts)),
+                       row_flat[ends] - row_flat[starts])
+    run_terms = tbl.column("term").chunk(0).take(pa.array(starts))
+    return run_terms, run_of, int(row_flat[ends[-1]])
 
 
 def _merge_partial_runs(hot_terms: set[str] | None, avgdl: float):
@@ -266,61 +366,16 @@ def _merge_partial_runs(hot_terms: set[str] | None, avgdl: float):
     one lexsort restores global doc order per run (partials from different
     map tasks interleave doc ranges; ids are unique per run because a doc
     lives in exactly one upstream batch), then the shared flat encode core
-    emits final/partial blobs — bit-identical to the exploded-row path.
-    Runs never span partitions (the shuffle key is (term, salt)); runs
-    spanning Arrow batches are carried."""
-    import pyarrow as pa
+    emits final/partial blobs — bit-identical to the exploded-row path."""
 
-    def encode_slice(tbl, starts: np.ndarray, ends: np.ndarray):
-        import pyarrow.compute as pc
+    def encode_slice(tbl, starts, ends):
+        run_terms, run_of, n = _list_runs(tbl, starts, ends)
+        ids, tfs, dls = (tbl.column(c).chunk(0).flatten().to_numpy(
+            zero_copy_only=False)[:n] for c in ("ids", "tfs", "dls"))
+        return _merge_encode_runs(run_terms, run_of, ids, tfs, dls,
+                                  hot_terms, avgdl)
 
-        ids_col = tbl.column("ids").chunk(0)
-        row_lens = pc.list_value_length(ids_col).to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        row_flat = np.concatenate(([0], np.cumsum(row_lens)))
-        flat_starts = row_flat[starts]
-        flat_ends = row_flat[ends]
-        nflat = int(flat_ends[-1])
-        ids_flat = ids_col.flatten().to_numpy(zero_copy_only=False)[:nflat]
-        tfs_flat = tbl.column("tfs").chunk(0).flatten().to_numpy(
-            zero_copy_only=False)[:nflat]
-        dls_flat = tbl.column("dls").chunk(0).flatten().to_numpy(
-            zero_copy_only=False)[:nflat]
-        run_of_value = np.repeat(np.arange(len(starts)),
-                                 flat_ends - flat_starts)
-        # primary key run_of_value is already nondecreasing, so run
-        # boundaries in the sorted space are unchanged
-        order = np.lexsort((ids_flat, run_of_value))
-        run_terms = tbl.column("term").chunk(0).take(pa.array(starts))
-        return _encode_runs_flat(
-            run_terms,
-            ids_flat[order].astype(np.uint64),
-            tfs_flat[order].astype(np.uint64),
-            dls_flat[order].astype(np.uint64),
-            flat_starts, flat_ends, hot_terms, avgdl)
-
-    def fn(batches):
-        carry = None
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            if carry is not None:
-                tbl = pa.concat_tables([carry, tbl])
-            tbl = tbl.combine_chunks()
-            if tbl.num_rows == 0:
-                carry = None
-                continue
-            starts = _run_starts_arrow(tbl)
-            if len(starts) == 1:
-                carry = tbl
-                continue
-            carry = tbl.slice(int(starts[-1]))
-            yield encode_slice(tbl, starts[:-1], starts[1:])
-        if carry is not None and carry.num_rows:
-            starts = _run_starts_arrow(carry)
-            ends = np.concatenate((starts[1:], [carry.num_rows]))
-            yield encode_slice(carry, starts, ends)
-
-    return fn
+    return _map_runs(encode_slice)
 
 
 def _decode_partial(blob: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -332,57 +387,6 @@ def _decode_partial(blob: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     ids, tfs, off = delta_varint_decode(blob, return_offset=True)
     dls, _ = varint_decode(blob, count=len(ids), offset=off)
     return ids, tfs, dls
-
-
-def _merge_final(avgdl: float, drop_bc=None):
-    """Phase 2: merge a hot term's salted partial blobs (decode → merge-sort
-    → re-encode). Only hot terms reach here — typically tens of groups.
-
-    drop_bc (a Spark broadcast of a SORTED int64 numpy array of tombstoned
-    doc_ids) additionally purges those docs during the merge — the
-    compaction-time physical delete. A term whose postings all vanish
-    emits no row (the term leaves the dictionary)."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        parts = [_decode_partial(b) for b in pdf["blob"]]
-        ids = np.concatenate([p[0] for p in parts])
-        tfs = np.concatenate([p[1] for p in parts])
-        dls = np.concatenate([p[2] for p in parts])
-        order = np.argsort(ids, kind="stable")
-        ids, tfs, dls = ids[order], tfs[order], dls[order]
-        if drop_bc is not None:
-            keep = ~np.isin(ids.astype(np.int64), drop_bc.value,
-                            assume_unique=False)
-            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-            if len(ids) == 0:
-                return pd.DataFrame({
-                    "term": pd.Series([], dtype=object),
-                    "df": pd.Series([], dtype=np.int64),
-                    "cf": pd.Series([], dtype=np.int64),
-                    "fan_in": pd.Series([], dtype=np.int64),
-                    "max_impact": pd.Series([], dtype=np.float64),
-                    "block_max": pd.Series([], dtype=object),
-                    "blob_len": pd.Series([], dtype=np.int64),
-                    "blob": pd.Series([], dtype=object),
-                })
-        from macrobase_spark.index.codec import varint_encode
-
-        blob = delta_varint_encode(ids, tfs) + varint_encode(dls)
-        impact = _impact(tfs, dls, avgdl)
-        return pd.DataFrame(
-            {
-                "term": [pdf["term"].iloc[0]],
-                "df": [len(ids)],
-                "cf": [int(tfs.sum())],
-                "fan_in": [len(parts)],
-                "max_impact": [float(impact.max())],
-                "block_max": [_block_max(impact)],
-                "blob_len": [len(blob)],
-                "blob": [blob],
-            }
-        )
-
-    return merge
 
 
 def _encode_pos_runs(hot_terms: set[str]):
@@ -448,126 +452,94 @@ def _merge_partial_pos_runs(hot_terms: set[str]):
     per run, entries re-sort by doc id (one lexsort; position segments
     follow their entry via a vectorized gather) and each run encodes into
     one self-contained positional blob — byte-identical to the
-    exploded-row path's output. Carry mirrors _merge_partial_runs."""
+    exploded-row path's output."""
+
+    def encode_slice(tbl, starts, ends):
+        run_terms, run_of, n = _list_runs(tbl, starts, ends)
+        ids, tfs, dls = (tbl.column(c).chunk(0).flatten().to_numpy(
+            zero_copy_only=False)[:n] for c in ("ids", "tfs", "dls"))
+        pos = tbl.column("pos").chunk(0).flatten().to_numpy(
+            zero_copy_only=False)
+        return _merge_encode_pos_runs(run_terms, run_of, ids, tfs, dls, pos,
+                                      hot_terms)
+
+    return _map_runs(encode_slice)
+
+
+def _blob_column(tbl, n: int):
+    """The first n blobs of a binary column as (concatenated bytes, byte
+    offsets) — zero-copy views of the Arrow buffers, ready for the codec's
+    batch decoders."""
     import pyarrow as pa
 
-    from macrobase_spark.index.codec import encode_positional
-
-    def encode_slice(tbl, starts: np.ndarray, ends: np.ndarray):
-        import pyarrow.compute as pc
-
-        ids_col = tbl.column("ids").chunk(0)
-        row_entries = pc.list_value_length(ids_col).to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        row_ent = np.concatenate(([0], np.cumsum(row_entries)))
-        e_starts = row_ent[starts]
-        e_ends = row_ent[ends]
-        ne = int(e_ends[-1])
-        ids_flat = ids_col.flatten().to_numpy(zero_copy_only=False)[:ne]
-        tfs_flat = tbl.column("tfs").chunk(0).flatten().to_numpy(
-            zero_copy_only=False)[:ne].astype(np.int64)
-        dls_flat = tbl.column("dls").chunk(0).flatten().to_numpy(
-            zero_copy_only=False)[:ne]
-        pos_flat = tbl.column("pos").chunk(0).flatten().to_numpy(
-            zero_copy_only=False)
-        run_of_entry = np.repeat(np.arange(len(starts)), e_ends - e_starts)
-        order = np.lexsort((ids_flat, run_of_entry))
-        ids_s, tfs_s, dls_s = ids_flat[order], tfs_flat[order], dls_flat[order]
-        # gather each entry's position segment to its new slot
-        seg_starts = np.concatenate(([0], np.cumsum(tfs_flat)))[:-1]
-        new_starts = np.concatenate(([0], np.cumsum(tfs_s)))
-        total = int(new_starts[-1])
-        idx = (np.repeat(seg_starts[order], tfs_s)
-               + (np.arange(total, dtype=np.int64)
-                  - np.repeat(new_starts[:-1], tfs_s)))
-        pos_s = pos_flat[:][idx]
-        # per-run flat position boundaries in the sorted space (run order
-        # is preserved by the lexsort's primary key)
-        run_pos = new_starts[e_starts]
-        run_pos_end = new_starts[e_ends]
-        terms_list = tbl.column("term").chunk(0).take(
-            pa.array(starts)).to_pylist()
-        rows = []
-        for i, t in enumerate(terms_list):
-            fs, fe = int(e_starts[i]), int(e_ends[i])
-            blob = encode_positional(
-                ids_s[fs:fe].astype(np.uint64),
-                tfs_s[fs:fe].astype(np.uint64),
-                dls_s[fs:fe].astype(np.uint64),
-                pos_s[int(run_pos[i]):int(run_pos_end[i])].astype(np.uint64))
-            rows.append((t, fe - fs, len(blob), blob, t not in hot_terms))
-        return pa.RecordBatch.from_arrays(
-            [pa.array([r[0] for r in rows], type=pa.string()),
-             pa.array([r[1] for r in rows], type=pa.int64()),
-             pa.array([r[2] for r in rows], type=pa.int64()),
-             pa.array([r[3] for r in rows], type=pa.binary()),
-             pa.array([r[4] for r in rows], type=pa.bool_())],
-            names=["term", "df", "blob_len", "blob", "final"])
-
-    def fn(batches):
-        carry = None
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            if carry is not None:
-                tbl = pa.concat_tables([carry, tbl])
-            tbl = tbl.combine_chunks()
-            if tbl.num_rows == 0:
-                carry = None
-                continue
-            starts = _run_starts_arrow(tbl)
-            if len(starts) == 1:
-                carry = tbl
-                continue
-            carry = tbl.slice(int(starts[-1]))
-            yield encode_slice(tbl, starts[:-1], starts[1:])
-        if carry is not None and carry.num_rows:
-            starts = _run_starts_arrow(carry)
-            ends = np.concatenate((starts[1:], [carry.num_rows]))
-            yield encode_slice(carry, starts, ends)
-
-    return fn
+    col = tbl.column("blob").chunk(0).slice(0, n)
+    odt = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    _, off_buf, data = col.buffers()
+    offs = np.frombuffer(off_buf, dtype=odt)[
+        col.offset:col.offset + n + 1].astype(np.int64)
+    buf = (np.frombuffer(data, dtype=np.uint8) if data is not None
+           else np.empty(0, dtype=np.uint8))
+    return buf[offs[0]:offs[-1]], offs - offs[0]
 
 
-def _merge_pos_final(drop_bc=None):
-    """Phase 2 of the positional layer: merge one hot term's salted
-    positional partials into a single doc-sorted blob. drop_bc purges
-    tombstoned docs during the merge (see _merge_final)."""
-    from macrobase_spark.index.codec import (decode_positional,
-                                             encode_positional,
-                                             merge_positional_blobs)
+def _segment_kernel(decode, merge):
+    """Segment-merge kernel over (term, blob) rows pre-sorted by term: per
+    Arrow batch of term runs, every segment blob decodes in ONE vectorized
+    pass, then `merge(run_terms, run_of, *decoded, rows_per_run)` sorts,
+    purges and re-encodes all runs at once — no per-term dispatch."""
+    import pyarrow as pa
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = merge_positional_blobs(list(pdf["blob"]))
-        df_count = int(pdf["df"].sum())
-        if drop_bc is not None:
-            ids, tfs, dls, flat = decode_positional(blob)
-            keep = ~np.isin(ids.astype(np.int64), drop_bc.value)
-            if not keep.all():
-                starts = np.concatenate(
-                    ([0], np.cumsum(tfs)))[:-1].astype(np.int64)
-                kept_idx = np.flatnonzero(keep)
-                segs = [flat[starts[i]:starts[i] + int(tfs[i])]
-                        for i in kept_idx]
-                flat = (np.concatenate(segs) if segs
-                        else np.empty(0, dtype=np.uint64))
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                if len(ids) == 0:
-                    return pd.DataFrame({
-                        "term": pd.Series([], dtype=object),
-                        "df": pd.Series([], dtype=np.int64),
-                        "blob_len": pd.Series([], dtype=np.int64),
-                        "blob": pd.Series([], dtype=object),
-                    })
-                blob = encode_positional(ids, tfs, dls, flat)
-            df_count = len(ids)
-        return pd.DataFrame({
-            "term": [pdf["term"].iloc[0]],
-            "df": [int(df_count)],
-            "blob_len": [len(blob)],
-            "blob": [blob],
-        })
+    def encode_slice(tbl, starts, ends):
+        *cols, counts = decode(*_blob_column(tbl, int(ends[-1])))
+        rows = ends - starts
+        run_of = np.repeat(np.repeat(np.arange(len(starts)), rows), counts)
+        run_terms = tbl.column("term").chunk(0).take(pa.array(starts))
+        return merge(run_terms, run_of, *cols, rows)
 
-    return merge
+    return _map_runs(encode_slice)
+
+
+def _merge_segments(avgdl: float, drop_bc=None):
+    """Merge each term's posting rows — a hot term's salted partials (build
+    phase 2) or its base + update segments (compaction) — into one posting
+    list, with fan_in = the number of rows merged. Byte-identical to a
+    per-term decode → stable argsort → delta_varint_encode +
+    varint_encode, with stats and block maxima under `avgdl`.
+
+    drop_bc (a Spark broadcast of a SORTED int64 numpy array of tombstoned
+    doc_ids) additionally purges those docs during the merge — the
+    compaction-time physical delete. A term whose postings all vanish
+    emits no row (the term leaves the dictionary)."""
+    from macrobase_spark.index.codec import decode_run_batch
+
+    return _segment_kernel(
+        decode_run_batch,
+        lambda terms, run_of, ids, tfs, dls, rows: _merge_encode_runs(
+            terms, run_of, ids, tfs, dls, set(), avgdl,
+            None if drop_bc is None else drop_bc.value, rows))
+
+
+def _merge_pos_segments(drop_bc=None):
+    """The positional layer's _merge_segments: one doc-sorted self-
+    contained blob per term; drop_bc purges as there."""
+    from macrobase_spark.index.codec import decode_positional_batch
+
+    return _segment_kernel(
+        decode_positional_batch,
+        lambda terms, run_of, ids, tfs, dls, pos, rows: _merge_encode_pos_runs(
+            terms, run_of, ids, tfs, dls, pos, set(),
+            None if drop_bc is None else drop_bc.value))
+
+
+def _merged_terms(rows: DataFrame, kernel, schema: str) -> DataFrame:
+    """Run a segment-merge kernel: co-locate each term's rows (only term
+    and blob travel through the shuffle), sort partitions by term, merge.
+    The partition count is explicit because AQE would coalesce a small
+    merge shuffle onto a single task."""
+    n = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    return (rows.select("term", "blob").repartition(n, "term")
+            .sortWithinPartitions("term")
+            .mapInArrow(kernel, schema=schema).drop("final"))
 
 
 def detect_hot_terms(src: DataFrame, sample_frac: float, threshold: int,
@@ -872,19 +844,10 @@ def build_index(
                         schema=_ENC_SCHEMA)
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        if os.environ.get("MB_ENC_MAT") == "1":
-            # experimental barrier: pin the cache before the union write
-            # (A/B shows the pipelined default wins — see BENCH.md r3 notes)
-            _tp = time.time()
-            encoded.count()
-            phases["encode_materialize"] = phases.get(
-                "encode_materialize", 0.0) + round(time.time() - _tp, 3)
         finals = encoded.filter(F.col("final")).drop("final")
-        merged_hot = (
-            encoded.filter(~F.col("final")).drop("final")
-            .groupBy("term")
-            .applyInPandas(_merge_final(avgdl), schema=_POSTINGS_SCHEMA)
-        )
+        # phase 2: hot terms' salted partials merge to one row per term
+        merged_hot = _merged_terms(encoded.filter(~F.col("final")),
+                                   _merge_segments(avgdl), _ENC_SCHEMA)
         merged = (
             finals.unionByName(merged_hot)
             .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int"))
@@ -950,9 +913,8 @@ def build_index(
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
             pos_finals = pos_enc.filter(F.col("final")).drop("final")
-            pos_hot = (pos_enc.filter(~F.col("final")).drop("final")
-                       .groupBy("term")
-                       .applyInPandas(_merge_pos_final(), schema=_POS_SCHEMA))
+            pos_hot = _merged_terms(pos_enc.filter(~F.col("final")),
+                                    _merge_pos_segments(), _POS_ENC_SCHEMA)
             (pos_finals.unionByName(pos_hot)
              .withColumn("bucket", F.pmod(F.xxhash64("term"),
                                           F.lit(num_buckets)).cast("int"))
@@ -1523,10 +1485,12 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     the same pass — for single-row terms the merge degenerates to a
     decode → re-encode that refreshes the bounds.
 
-    Scale shape: the per-term merge is the SAME blob-level fan-in as the
-    fresh build's phase 2 (pre-compressed partials, decode + merge-sort +
-    re-encode on one reducer per term) — amortized background work, never
-    on the update or query path.
+    Scale shape: the merge is the fresh build's phase-2 kernel
+    (_merge_segments / _merge_pos_segments): segment rows shuffle on term,
+    and each task decodes, doc-sorts (one lexsort) and re-encodes a whole
+    Arrow batch of terms at once — amortized background work, never on
+    the update or query path. A purge drops tombstoned postings inside the
+    same kernel.
 
     Crash safety: the overwrite below deletes the stale buckets' old rows,
     so those files (plus stats.json/manifest state) are first copied to
@@ -1534,7 +1498,12 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     it (restore_compact_backup), making a crashed compaction a no-op
     instead of data loss. The backup is bounded by the stale buckets'
     compressed size (the deltas since the last compaction plus their base
-    rows), and is deleted on success."""
+    rows), and is deleted on success.
+
+    The report's `phases` holds wall seconds per step, like build_index's:
+    backup, postings_merge (including the post-purge stats it encodes
+    under), positions_merge (positional indexes only) and docs_rewrite
+    (the purge's docs table swap plus the length-stats refresh)."""
     restore_compact_backup(out_dir)  # recover any earlier crashed attempt
     recover_update_inflight(out_dir)
     _key = _mutation_begin(out_dir)
@@ -1557,8 +1526,10 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
                         if d.startswith("bucket=")]
             stale = sorted(set(stale) | set(existing))
         if not stale:
-            return {"version": version, "compacted_buckets": []}
+            return {"version": version, "compacted_buckets": [], "phases": {}}
 
+        phases: dict[str, float] = {}
+        _tp = time.time()
         backup = _compact_backup_dir(out_dir)
         shutil.rmtree(backup, ignore_errors=True)
         os.makedirs(backup)
@@ -1592,7 +1563,9 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
                             os.path.join(backup, _TOMBSTONES))
         with open(os.path.join(backup, "_complete"), "w") as f:
             f.write("1")
+        phases["backup"] = round(time.time() - _tp, 3)
 
+        _tp = time.time()
         drop_bc = None
         avgdl_enc = avgdl
         if purge:
@@ -1611,12 +1584,10 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
             sum_dl_new = int(row["sum_dl"] or 0)
             avgdl_enc = sum_dl_new / max(1, n_docs_new)
         merged = (
-            spark.read.parquet(postings_root)
-            .filter(F.col("bucket").isin(stale))
-            .drop("bucket")
-            .groupBy("term")
-            .applyInPandas(_merge_final(avgdl_enc, drop_bc),
-                           schema=_POSTINGS_SCHEMA)
+            _merged_terms(
+                spark.read.parquet(postings_root)
+                .filter(F.col("bucket").isin(stale)),
+                _merge_segments(avgdl_enc, drop_bc), _ENC_SCHEMA)
             .withColumn("bucket", F.pmod(F.xxhash64("term"),
                                          F.lit(stats["num_buckets"])).cast("int"))
             .repartition("bucket")
@@ -1641,16 +1612,17 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
                 shutil.rmtree(os.path.join(postings_root, f"bucket={b}"),
                               ignore_errors=True)
             merged.unpersist()
+        phases["postings_merge"] = round(time.time() - _tp, 3)
         if has_positions:
             # positional segments of the same stale buckets merge back to
-            # one doc-sorted blob per term (blob-level fan-in, one reducer
-            # per term — same shape as the main merge above)
+            # one doc-sorted blob per term (same kernel shape as the main
+            # merge above)
+            _tp = time.time()
             pos_merged = (
-                spark.read.parquet(positions_root)
-                .filter(F.col("bucket").isin(stale))
-                .drop("bucket")
-                .groupBy("term")
-                .applyInPandas(_merge_pos_final(drop_bc), schema=_POS_SCHEMA)
+                _merged_terms(
+                    spark.read.parquet(positions_root)
+                    .filter(F.col("bucket").isin(stale)),
+                    _merge_pos_segments(drop_bc), _POS_ENC_SCHEMA)
                 .withColumn("bucket", F.pmod(
                     F.xxhash64("term"),
                     F.lit(stats["num_buckets"])).cast("int"))
@@ -1672,6 +1644,8 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
                     shutil.rmtree(os.path.join(positions_root, f"bucket={b}"),
                                   ignore_errors=True)
                 pos_merged.unpersist()
+            phases["positions_merge"] = round(time.time() - _tp, 3)
+        _tp = time.time()
         if purge:
             # docs table rewrite: read old → write new dir → swap (never
             # overwrite the path being read); the backup covers every
@@ -1696,6 +1670,7 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
             ).collect()[0][0]
             stats["len_med"] = float(qs[1])
             stats["len_mad"] = (float(qs[2]) - float(qs[0])) / 2.0 or 1e-9
+        phases["docs_rewrite"] = round(time.time() - _tp, 3)
         with open(os.path.join(out_dir, "stats.json"), "w") as f:
             json.dump(stats, f)
         with open(os.path.join(out_dir, "manifest.jsonl"), "a") as f:
@@ -1705,7 +1680,8 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
                                     "ts": time.time()}) + "\n")
         shutil.rmtree(backup)  # compaction fully committed — drop the backup
         invalidate_index_cache(out_dir)
-        return {"version": version, "compacted_buckets": sorted(stale)}
+        return {"version": version, "compacted_buckets": sorted(stale),
+                "phases": phases}
     finally:
         _mutation_end(_key)
 

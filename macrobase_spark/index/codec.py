@@ -53,6 +53,32 @@ def varint_encode(values: np.ndarray) -> bytes:
     return buf.tobytes()
 
 
+def _join_run_streams(counts: np.ndarray,
+                      streams: list[tuple[np.ndarray, np.ndarray, np.ndarray]]
+                      ) -> list[bytes]:
+    """Per run i: varint(counts[i]) ‖ each stream's values [s[i], e[i]).
+    Each (values, s, e) stream is varint-encoded in ONE whole-array pass;
+    the per-run blobs are then assembled by byte-offset slicing."""
+    hdr_buf, hdr_off = varint_encode_offsets(
+        np.asarray(counts, dtype=np.uint64))
+    parts = [(hdr_buf.tobytes(), hdr_off[:-1].tolist(), hdr_off[1:].tolist())]
+    for values, s, e in streams:
+        buf, off = varint_encode_offsets(values)
+        parts.append((buf.tobytes(), off[s].tolist(), off[e].tolist()))
+    return [b"".join(seg) for seg in zip(*(
+        [b[i:j] for i, j in zip(s, e)] for b, s, e in parts))]
+
+
+def _run_deltas(values: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Gaps between consecutive values; the first value of each run (the
+    `starts` indices) is stored raw."""
+    v = np.ascontiguousarray(values, dtype=np.uint64)
+    d = v.copy()
+    d[1:] = v[1:] - v[:-1]
+    d[starts] = v[starts]
+    return d
+
+
 def encode_run_batch(ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
                      starts: np.ndarray, ends: np.ndarray) -> list[bytes]:
     """Encode MANY posting runs at once (runs are [starts[i], ends[i])
@@ -61,20 +87,28 @@ def encode_run_batch(ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
     identical layout to delta_varint_encode(ids, tfs) + varint_encode(dls).
     This removes the per-term numpy-call overhead of encoding 50k tiny
     posting lists individually."""
-    ids = np.ascontiguousarray(ids, dtype=np.uint64)
-    deltas = ids.copy()
-    deltas[1:] = ids[1:] - ids[:-1]
-    deltas[starts] = ids[starts]  # first value of each run stored raw
-    hdr_buf, hdr_off = varint_encode_offsets((ends - starts).astype(np.uint64))
-    d_buf, d_off = varint_encode_offsets(deltas)
-    t_buf, t_off = varint_encode_offsets(np.asarray(tfs, dtype=np.uint64))
-    l_buf, l_off = varint_encode_offsets(np.asarray(dls, dtype=np.uint64))
-    hb, db, tb, lb = (x.tobytes() for x in (hdr_buf, d_buf, t_buf, l_buf))
-    return [
-        hb[hdr_off[i]:hdr_off[i + 1]]
-        + db[d_off[s]:d_off[e]] + tb[t_off[s]:t_off[e]] + lb[l_off[s]:l_off[e]]
-        for i, (s, e) in enumerate(zip(starts, ends))
-    ]
+    return _join_run_streams(ends - starts, [
+        (_run_deltas(ids, starts), starts, ends),
+        (np.asarray(tfs, dtype=np.uint64), starts, ends),
+        (np.asarray(dls, dtype=np.uint64), starts, ends)])
+
+
+def encode_positional_batch(ids: np.ndarray, tfs: np.ndarray,
+                            dls: np.ndarray, flat_pos: np.ndarray,
+                            starts: np.ndarray, ends: np.ndarray
+                            ) -> list[bytes]:
+    """encode_positional for MANY runs at once: runs are [starts[i],
+    ends[i]) slices of the flat doc arrays (each sorted by id); doc j owns
+    tfs[j] consecutive values of `flat_pos` (absolute positions, ascending
+    within the doc). Byte-identical to encode_positional per run."""
+    t = np.asarray(tfs, dtype=np.uint64)
+    pstart = np.concatenate(([0], np.cumsum(t, dtype=np.int64)))
+    return _join_run_streams(ends - starts, [
+        (_run_deltas(ids, starts), starts, ends),
+        (t, starts, ends),
+        (np.asarray(dls, dtype=np.uint64), starts, ends),
+        (_run_deltas(flat_pos, pstart[:-1][t > 0]),
+         pstart[starts], pstart[ends])])
 
 
 def varint_decode(buf: bytes | np.ndarray, count: int | None = None,
@@ -133,6 +167,52 @@ def delta_varint_decode(buf: bytes, return_offset: bool = False):
     return (ids, tfs, off) if return_offset else (ids, tfs)
 
 
+def _blob_values(buf, offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Decode every varint of many concatenated blobs in one pass. `buf`
+    holds the blobs back to back, blob i at bytes [offsets[i],
+    offsets[i+1]). A blob is a whole number of varints, so the
+    concatenation is itself a varint stream. Returns (values, vo): blob
+    i's values are values[vo[i]:vo[i+1]]."""
+    raw = np.frombuffer(buf, dtype=np.uint8)
+    values, _ = varint_decode(raw)
+    n_ends = np.concatenate(
+        ([0], np.cumsum((raw & 0x80) == 0, dtype=np.int64)))
+    return values, n_ends[np.asarray(offsets, dtype=np.int64)]
+
+
+def _restart_cumsum(deltas: np.ndarray, seg_starts: np.ndarray,
+                    seg_lens: np.ndarray) -> np.ndarray:
+    """Prefix sums that restart at each segment (whose first delta is a
+    raw value): one global cumsum minus each segment's running base.
+    uint64 wrap-around keeps the subtraction exact."""
+    csum = np.cumsum(deltas, dtype=np.uint64)
+    live = seg_lens > 0
+    base = np.zeros(len(seg_lens), dtype=np.uint64)
+    base[live] = csum[seg_starts[live]] - deltas[seg_starts[live]]
+    return csum - np.repeat(base, seg_lens)
+
+
+def _decode_run_streams(values: np.ndarray, vo: np.ndarray):
+    """Gather the id/tf/dl streams of every blob (layout varint(n) ‖ n id
+    deltas ‖ n tfs ‖ n dls ‖ …) → (ids, tfs, dls, counts): flat in blob
+    order, blob i owning counts[i] consecutive postings."""
+    counts = values[vo[:-1]].astype(np.int64)
+    first = np.concatenate(([0], np.cumsum(counts)))
+    idx = (np.repeat(vo[:-1] + 1 - first[:-1], counts)
+           + np.arange(first[-1], dtype=np.int64))
+    step = np.repeat(counts, counts)
+    ids = _restart_cumsum(values[idx], first[:-1], counts)
+    return ids, values[idx + step], values[idx + 2 * step], counts
+
+
+def decode_run_batch(buf, offsets: np.ndarray):
+    """Decode MANY `delta_varint_encode(ids, tfs) + varint_encode(dls)`
+    blobs at once (see _blob_values for the buf/offsets layout) →
+    (ids, tfs, dls, counts): flat uint64 arrays in blob order, blob i
+    owning counts[i] consecutive postings. No per-blob Python."""
+    return _decode_run_streams(*_blob_values(buf, offsets))
+
+
 def merge_posting_blobs(blobs: list[bytes]) -> bytes:
     """Merge several posting-list blobs for the same term (disjoint or
     interleaved doc ranges, e.g. salted partials) into one sorted blob."""
@@ -186,13 +266,9 @@ def decode_positional(buf: bytes) -> tuple[np.ndarray, np.ndarray,
     dls, off = varint_decode(buf, count=n, offset=off)
     total = int(tfs.sum())
     deltas, _ = varint_decode(buf, count=total, offset=off)
-    # segmented cumsum: overall cumsum, then subtract the running total
-    # accumulated BEFORE each doc's first position (stored raw, so the
-    # segment restarts exactly there)
-    csum = np.cumsum(deltas, dtype=np.uint64)
-    starts = np.concatenate(([0], np.cumsum(tfs)))[:-1].astype(np.int64)
-    seg_base = csum[starts] - deltas[starts]
-    flat = csum - np.repeat(seg_base, tfs.astype(np.int64))
+    # each doc's first position is stored raw, so its segment restarts there
+    t = tfs.astype(np.int64)
+    flat = _restart_cumsum(deltas, np.concatenate(([0], np.cumsum(t)))[:-1], t)
     return ids, tfs, dls, flat
 
 
@@ -211,3 +287,19 @@ def merge_positional_blobs(blobs: list[bytes]) -> bytes:
     segs = [flat_all[starts[i]:starts[i] + int(tfs[i])] for i in order]
     flat = (np.concatenate(segs) if segs else np.empty(0, dtype=np.uint64))
     return encode_positional(ids[order], tfs[order], dls[order], flat)
+
+
+def decode_positional_batch(buf, offsets: np.ndarray):
+    """decode_positional for MANY blobs at once (buf/offsets as in
+    decode_run_batch) → (ids, tfs, dls, flat_pos, counts): flat arrays in
+    blob order; doc j owns tfs[j] consecutive ABSOLUTE positions."""
+    values, vo = _blob_values(buf, offsets)
+    ids, tfs, dls, counts = _decode_run_streams(values, vo)
+    p0 = vo[:-1] + 1 + 3 * counts  # first position delta of each blob
+    ptot = vo[1:] - p0
+    pfirst = np.concatenate(([0], np.cumsum(ptot)))
+    deltas = values[np.repeat(p0 - pfirst[:-1], ptot)
+                    + np.arange(pfirst[-1], dtype=np.int64)]
+    t = tfs.astype(np.int64)
+    flat = _restart_cumsum(deltas, np.concatenate(([0], np.cumsum(t)))[:-1], t)
+    return ids, tfs, dls, flat, counts

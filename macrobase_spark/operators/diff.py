@@ -259,9 +259,11 @@ def diff(
             """)
         rows = grouped.limit(collect_threshold + 2).collect()
         if len(rows) <= collect_threshold + 1:
-            total_row = next(r for r in rows if r["_gid"] == all_absent)
-            g_out = float(total_row["outlier_count"] or 0.0)
-            g_tot = float(total_row["total_count"] or 0.0)
+            # empty input: GROUPING SETS emits no grand-total row at all
+            total_row = next((r for r in rows if r["_gid"] == all_absent),
+                             None)
+            g_out = float(total_row["outlier_count"] or 0.0) if total_row else 0.0
+            g_tot = float(total_row["total_count"] or 0.0) if total_row else 0.0
             if g_out == 0.0:
                 raise ValueError("no outliers — nothing to explain")
             grouped = df.sparkSession.createDataFrame(rows, grouped.schema)

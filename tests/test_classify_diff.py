@@ -315,3 +315,17 @@ def test_diff_join_counts_stay_integer(spark):
     assert by["a"]["outlier_count"] == 1.0  # exactly, not 0.9999999999999999
     assert by["a"]["total_count"] == 49.0
     assert by["b"]["outlier_count"] == 3.0
+
+
+@pytest.mark.parametrize("kw", [
+    {},                                   # fused single-pass path
+    {"prefilter_min_support": True},      # two-pass path
+    {"containment": True},                # two-pass path
+])
+def test_diff_empty_input_raises_no_outliers(spark, kw):
+    """Zero input rows leave GROUPING SETS without a grand-total row; every
+    path must raise the documented error, not StopIteration."""
+    df = spark.createDataFrame([], "location string, version string, "
+                                   "_OUTLIER double")
+    with pytest.raises(ValueError, match="no outliers"):
+        diff(df, ["location", "version"], **kw)

@@ -174,3 +174,36 @@ def test_index_stats_reports_tombstones(spark, tomb_index):
     compact_index(spark, out)
     st = index_stats(spark, out).collect()
     assert all(r["pending_tombstones"] == 0 and r["prunable"] for r in st)
+
+
+def test_compacted_index_equals_fresh_build(spark, tmp_path):
+    """update + delete + compact_index leaves exactly the posting lists a
+    fresh build over the live turns writes: same blobs, stats and block-max
+    metadata (fan_in aside — it counts the merged rows). Hot terms make
+    both the build's phase-2 merge and compaction merge several rows."""
+    t = with_doc_id(synth_transcripts(spark, n_convs=60, seed=3)).cache()
+    ids = sorted(r["doc_id"] for r in t.select("doc_id").collect())
+    cut = ids[len(ids) * 3 // 4]
+    victims = ids[::9]
+    kw = dict(num_buckets=4, positions=True, hot_df_threshold=100,
+              hot_sample_frac=0.5)
+    out, fresh = str(tmp_path / "lsm"), str(tmp_path / "fresh")
+    assert build_index(t.filter(F.col("doc_id") <= cut), out, **kw)["hot_terms"]
+    update_index(t.filter(F.col("doc_id") > cut), out)
+    delete_docs(spark, out, victims)
+    rep = compact_index(spark, out)
+    assert set(rep["phases"]) == {"backup", "postings_merge",
+                                  "positions_merge", "docs_rewrite"}
+    build_index(t.filter(~F.col("doc_id").isin(victims)), fresh, **kw)
+
+    for layer, cols in (("postings", ["term", "df", "cf", "max_impact",
+                                      "block_max", "blob"]),
+                        ("positions", ["term", "df", "blob"])):
+        a = spark.read.parquet(os.path.join(out, layer)).select(cols)
+        b = spark.read.parquet(os.path.join(fresh, layer)).select(cols)
+        assert a.count() == b.count() > 0
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    for idx in (out, fresh):
+        fan_in = spark.read.parquet(os.path.join(idx, "postings")).agg(
+            F.max("fan_in")).collect()[0][0]
+        assert fan_in > 1
